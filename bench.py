@@ -96,7 +96,7 @@ def main() -> None:
             F.lit(1000.0).alias("radius_m"),
             F.lit(8).alias("max_cells"),
         )
-        rq._cover_queries(wq, bucket=3, max_cells=8).count()
+        rq.plan_query_cells(spark, wq, bucket=3, max_cells=8)
         # micro index build: warms the whole build path (covering UDF,
         # parquet writers, manifest, bitmap/roaring encode in postings)
         wpts = spark.range(64 * cpus).select(

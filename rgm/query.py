@@ -33,89 +33,45 @@ from pyspark.sql import types as T
 
 from . import cellmath as cm
 from . import bitmap as bm
-from .index import PARENT3_EXPR, _ensure_region_cols, load_keys, load_pairs, load_postings
-from .udfs import REGION_COLS, make_cover_udf, make_tile_udf, refine_udf
+from .index import _ensure_region_cols, load_keys, load_pairs, load_postings
+from .udfs import REGION_COLS, make_tile_udf, refine_udf
 
 
-def _cover_queries(queries: DataFrame, bucket: int, max_cells: int) -> DataFrame:
-    """queries (query_id + region cols) -> + cells / ancs arrays."""
-    q = _ensure_region_cols(queries)
-    q = q.withColumn("max_cells", F.coalesce(F.col("max_cells"), F.lit(max_cells)).cast("int"))
-    cover_udf = make_cover_udf(bucket)
-    return q.withColumn("qcov", cover_udf(*[F.col(c) for c in REGION_COLS]))
-
-
-# query batches up to this size are planned driver-side: the covering runs
-# as one small job, the exploded cell list becomes a local DataFrame and the
-# level-3 prune prefixes are computed with numpy — a broadcast join needs
-# the query side in driver memory anyway
-SMALL_QUERY_ROWS = 100_000
-
-# ...but the covering KERNEL only runs on the driver below this row count.
-# BENCH/QUERY_FLOORS.md rep 0 measured the all-driver planner at ~0.46 ms
-# per cap query (14.9s serial at 32k caps), flat in cores — it pinned the
-# query stages' N→4N pair efficiency at ~0.29 regardless of batch size.
-# Above the threshold the kernel runs as one mapInPandas pass at default
-# parallelism and only the exploded (query_id, cell_id) frame returns to
-# the driver; below it, one ~2s Spark job floor would cost more than the
-# serial kernel saves.
-DRIVER_COVER_ROWS = int(os.environ.get("RGM_DRIVER_COVER_ROWS", "4096"))
+# The covering kernel runs on the driver up to this many queries; above it,
+# as one mapInPandas pass at default parallelism whose exploded frame is
+# collected back. BENCH/QUERY_FLOORS.md rep 0 measured the driver kernel at
+# ~0.46 ms per cap query, flat in cores — serial work proportional to the
+# batch; below the split, one ~2s Spark job floor would cost more than
+# distributing the kernel saves.
+DRIVER_COVER_ROWS = 4096
 
 _Q_CELLS_SCHEMA = "query_id string, cell_id long, is_anc boolean, q_l3 long"
 _NUM_REGION_COLS = ("lat", "lng", "radius_m", "lat_lo", "lat_hi", "lng_lo", "lng_hi")
 
 
-def _explode_covers(qids: np.ndarray, cov: pd.DataFrame) -> pd.DataFrame:
-    """Covering kernel output (cells/ancs lists per query) -> flat
-    (query_id, cell_id, is_anc, q_l3) frame. Shared by the driver-side
-    planner and the distributed mapInPandas worker."""
+def _cover_cells(pdf: pd.DataFrame, bucket: int) -> pd.DataFrame:
+    """Region rows (query_id + REGION_COLS) -> flat (query_id, cell_id,
+    is_anc, q_l3) frame: the one covering code path, run on the driver or
+    inside the planner's mapInPandas worker."""
+    from .udfs import compute_covers
+
+    for c in _NUM_REGION_COLS:
+        pdf[c] = pd.to_numeric(pdf[c], errors="coerce")
+    cov = compute_covers(*(pdf[c] for c in REGION_COLS), bucket)
     lens_c = np.array([len(x) for x in cov["cells"]], dtype=np.int64)
     lens_a = np.array([len(x) for x in cov["ancs"]], dtype=np.int64)
     cid = np.concatenate(
-        [np.concatenate([np.asarray(x, dtype=np.int64) for x in cov["cells"]])
-         if lens_c.sum() else np.empty(0, np.int64),
-         np.concatenate([np.asarray(x, dtype=np.int64) for x in cov["ancs"]])
-         if lens_a.sum() else np.empty(0, np.int64)]
+        [np.asarray(x, dtype=np.int64) for x in cov["cells"]]
+        + [np.asarray(x, dtype=np.int64) for x in cov["ancs"]]
+        + [np.empty(0, np.int64)]
     )
+    qids = pdf["query_id"].to_numpy()
     qid = np.concatenate([np.repeat(qids, lens_c), np.repeat(qids, lens_a)])
     anc = np.concatenate(
         [np.zeros(int(lens_c.sum()), bool), np.ones(int(lens_a.sum()), bool)]
     )
-    cells_u = cm.from_spark(cid)
-    l3 = (
-        cm.to_spark(cm.parent(cells_u, np.full(len(cells_u), 3)))
-        if len(cells_u) else np.empty(0, np.int64)
-    )
+    l3 = cm.to_spark(cm.parent(cm.from_spark(cid), np.full(len(cid), 3)))
     return pd.DataFrame({"query_id": qid, "cell_id": cid, "is_anc": anc, "q_l3": l3})
-
-
-def _covers_distributed(
-    spark: SparkSession, q: DataFrame, bucket: int
-) -> pd.DataFrame:
-    """Run the covering kernel over the query batch as ONE mapInPandas pass
-    at default parallelism and collect only the exploded cell frame. The
-    query batch is still broadcast-regime small (<= SMALL_QUERY_ROWS), so
-    the result lands in driver memory exactly as the all-driver path's —
-    downstream planning (prefix list, local q_cells relation) is unchanged."""
-    from .udfs import compute_covers
-
-    n_parts = max(int(spark.sparkContext.defaultParallelism), 1)
-    sel = q.select("query_id", *REGION_COLS).repartition(n_parts)
-
-    def worker(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            for c in _NUM_REGION_COLS:
-                pdf[c] = pd.to_numeric(pdf[c], errors="coerce")
-            cov = compute_covers(
-                pdf["kind"], pdf["lat"], pdf["lng"], pdf["radius_m"],
-                pdf["lat_lo"], pdf["lat_hi"], pdf["lng_lo"], pdf["lng_hi"],
-                pdf["verts"], pdf["cell_id"], pdf["max_cells"], bucket,
-            )
-            yield _explode_covers(pdf["query_id"].to_numpy(), cov)
-
-    return sel.mapInPandas(worker, schema=_Q_CELLS_SCHEMA).toPandas()
 
 
 def plan_query_cells(
@@ -123,54 +79,36 @@ def plan_query_cells(
     queries: DataFrame,
     bucket: int,
     max_cells: int,
-    collect_small: bool = True,
-) -> tuple[DataFrame, list[int] | None]:
-    """-> (q_cells(query_id, cell_id, is_anc, q_l3), prune prefixes or None).
+) -> tuple[DataFrame, list[int]]:
+    """-> (q_cells(query_id, cell_id, is_anc, q_l3), sorted level-3 prune
+    prefixes of the covering).
 
-    Small query batches (the broadcast-join regime) are planned entirely
-    driver-side: the raw region rows are collected and the covering kernel
-    (rgm.udfs.compute_covers — the same code the executor UDF runs) executes
-    locally, so a search issues ZERO Spark jobs before the index join.
+    Covers each query once, then materializes the result: ``q_cells`` is a
+    local relation, so a join against it never runs the covering again. A
+    probe collects ``limit(DRIVER_COVER_ROWS + 1)`` rows of the batch. Up to
+    DRIVER_COVER_ROWS rows, the collected rows are covered on the driver and
+    no other Spark job runs before the index join. Above it, the covering
+    runs as one mapInPandas job over the batch and its exploded frame is
+    collected, so ``queries`` is evaluated twice (probe, covering) and must
+    be deterministic. The exploded frame sits in driver memory either way
+    (~12 KB per 1 km cap).
     """
-    if collect_small:
-        q = _ensure_region_cols(queries)
-        q = q.withColumn(
-            "max_cells", F.coalesce(F.col("max_cells"), F.lit(max_cells)).cast("int")
+    q = _ensure_region_cols(queries)
+    q = q.withColumn(
+        "max_cells", F.coalesce(F.col("max_cells"), F.lit(max_cells)).cast("int")
+    ).select("query_id", *REGION_COLS)
+    rows = q.limit(DRIVER_COVER_ROWS + 1).collect()
+    if len(rows) <= DRIVER_COVER_ROWS:
+        out = _cover_cells(pd.DataFrame(rows, columns=q.columns), bucket)
+    else:
+        n_parts = max(int(spark.sparkContext.defaultParallelism), 1)
+        out = (
+            q.repartition(n_parts)
+            .mapInPandas(lambda it: (_cover_cells(p, bucket) for p in it), _Q_CELLS_SCHEMA)
+            .toPandas()
         )
-        rows = q.select("query_id", *REGION_COLS).limit(SMALL_QUERY_ROWS + 1).collect()
-        if len(rows) <= SMALL_QUERY_ROWS:
-            if not rows:
-                empty = spark.createDataFrame([], _Q_CELLS_SCHEMA)
-                return empty, []
-            if len(rows) > DRIVER_COVER_ROWS:
-                out = _covers_distributed(spark, q, bucket)
-            else:
-                from .udfs import compute_covers
-
-                pdf = pd.DataFrame([r.asDict() for r in rows])
-                for c in _NUM_REGION_COLS:
-                    pdf[c] = pd.to_numeric(pdf[c], errors="coerce")
-                cov = compute_covers(
-                    pdf["kind"], pdf["lat"], pdf["lng"], pdf["radius_m"],
-                    pdf["lat_lo"], pdf["lat_hi"], pdf["lng_lo"], pdf["lng_hi"],
-                    pdf["verts"], pdf["cell_id"], pdf["max_cells"], bucket,
-                )
-                out = _explode_covers(pdf["query_id"].to_numpy(), cov)
-            q_cells = spark.createDataFrame(out, schema=_Q_CELLS_SCHEMA)
-            return q_cells, sorted(int(x) for x in pd.unique(out["q_l3"]))
-    covered = _cover_queries(queries, bucket, max_cells)
-    q_origin = covered.select(
-        "query_id", F.explode("qcov.cells").alias("cell_id"), F.lit(False).alias("is_anc")
-    )
-    from .index import anc_lattice_sql
-
-    q_anc = covered.select(
-        "query_id",
-        F.explode(F.expr(anc_lattice_sql("qcov.cells", bucket))).alias("cell_id"),
-        F.lit(True).alias("is_anc"),
-    )
-    q_cells = q_origin.unionByName(q_anc).withColumn("q_l3", F.expr(PARENT3_EXPR))
-    return q_cells, None
+    q_cells = spark.createDataFrame(out, schema=_Q_CELLS_SCHEMA)
+    return q_cells, sorted(int(x) for x in pd.unique(out["q_l3"]))
 
 
 def index_bucket(index_path: str, bucket: int | None) -> int:
@@ -185,13 +123,24 @@ def index_bucket(index_path: str, bucket: int | None) -> int:
     return int(manifest_doc(index_path).get("params", {}).get("bucket", 3))
 
 
+def _matched(table: DataFrame, q_cells: DataFrame, prefixes: list[int]) -> DataFrame:
+    """Index rows (pairs or postings) whose cell hierarchy-matches a query
+    cell, joined to the query cell. The covering's level-3 prefixes become
+    an IN-filter that reaches Parquet row-group stats (zone-map pruning, the
+    SuRF analog); the query cells are broadcast; origin query cells match
+    any index row, ancestor query cells match origin rows only."""
+    pruned = table.filter(F.col("cell_l3").isin(prefixes))
+    return pruned.join(F.broadcast(q_cells), on="cell_id", how="inner").filter(
+        F.col("is_origin") | ~F.col("is_anc")
+    )
+
+
 def candidate_keys(
     spark: SparkSession,
     index_path: str,
     queries: DataFrame,
     bucket: int | None = None,
     max_cells: int = 30,
-    prune: bool = True,
     mode: str = "equi",
 ) -> DataFrame:
     """Cell-level candidate (query_id, key_id) pairs — the reference's
@@ -210,6 +159,9 @@ def candidate_keys(
     reformulation (tests assert both modes return identical key sets), not
     for production volume. Range endpoints share the query cell's face, so
     the int64 BETWEEN is safe (no sign-boundary crossing).
+
+    ``queries`` must be deterministic: plan_query_cells may evaluate it
+    more than once.
     """
     if mode not in ("equi", "range"):
         raise ValueError(mode)
@@ -218,15 +170,10 @@ def candidate_keys(
     )
 
     pairs = load_pairs(spark, index_path)
-    if prune:
-        if prefixes is None:
-            prefixes = [r["q_l3"] for r in q_cells.select("q_l3").distinct().collect()]
-        # zone-map pruning: the query covering's level-3 prefixes are tiny;
-        # the IN-filter reaches Parquet row-group stats (SuRF analog)
-        pairs = pairs.filter(F.col("cell_l3").isin(prefixes))
-
     if mode == "range":
-        origin_pairs = pairs.filter(F.col("is_origin"))
+        origin_pairs = pairs.filter(
+            F.col("cell_l3").isin(prefixes) & F.col("is_origin")
+        )
         rb = _range_bounds_udf()
         q_rng = (
             q_cells.filter(~F.col("is_anc"))
@@ -244,10 +191,7 @@ def candidate_keys(
         )
         return desc.unionByName(anc).distinct()
 
-    joined = pairs.join(
-        F.broadcast(q_cells), on="cell_id", how="inner"
-    ).filter(F.col("is_origin") | ~F.col("is_anc"))
-    return joined.select("query_id", "key_id").distinct()
+    return _matched(pairs, q_cells, prefixes).select("query_id", "key_id").distinct()
 
 
 def search(
@@ -257,7 +201,6 @@ def search(
     bucket: int | None = None,
     max_cells: int = 30,
     refine: bool = True,
-    prune: bool = True,
     refine_mode: str = "point",
 ) -> DataFrame:
     """Intersects/Contains query: keys whose indexed geometry matches each
@@ -274,8 +217,11 @@ def search(
                    the reference stubs (A21)
       'contains'   query region fully contains the payload region
     Returns (query_id, key_id, key, p_lat, p_lng).
+
+    ``queries`` must be deterministic: the planner reads it, and refinement
+    reads it again for the exact query geometry.
     """
-    cand = candidate_keys(spark, index_path, queries, bucket, max_cells, prune)
+    cand = candidate_keys(spark, index_path, queries, bucket, max_cells)
     # payload-geometry columns are only read when region-vs-region
     # refinement needs them; the mass path (point refinement / cell-level
     # Contains) scans 4 narrow key columns
@@ -321,7 +267,6 @@ def count_keys(
     queries: DataFrame,
     bucket: int | None = None,
     max_cells: int = 30,
-    prune: bool = True,
 ) -> DataFrame:
     """Distinct candidate-key count per query via roaring posting lists —
     the bitmap fastunion path (A16/A17), never touching per-key rows.
@@ -329,20 +274,14 @@ def count_keys(
     Postings exist for origin cells AND their lattice-ancestor rollups, so
     this is the exact same broadcast equi-join shape as ``search``: the
     query's origin cells match any posting row; the query's ancestor cells
-    match origin postings only."""
+    match origin postings only.
+
+    ``queries`` must be deterministic: plan_query_cells may evaluate it
+    more than once."""
     q_cells, prefixes = plan_query_cells(
         spark, queries, index_bucket(index_path, bucket), max_cells
     )
-
-    postings = load_postings(spark, index_path)
-    if prune:
-        if prefixes is None:
-            prefixes = [r["q_l3"] for r in q_cells.select("q_l3").distinct().collect()]
-        postings = postings.filter(F.col("cell_l3").isin(prefixes))
-
-    matched = postings.join(F.broadcast(q_cells), on="cell_id", how="inner").filter(
-        F.col("is_origin") | ~F.col("is_anc")
-    )
+    matched = _matched(load_postings(spark, index_path), q_cells, prefixes)
 
     def _union_groups(pdf):
         """(sorted-unique values, group starts/ends, per-group query_id)
@@ -492,7 +431,7 @@ def knn(
     r0_m: float = 2000.0,
     max_rounds: int = 8,
     bucket: int | None = None,
-    batch_threshold: int = SMALL_QUERY_ROWS,
+    batch_threshold: int = 100_000,
     out_path: str | None = None,
 ) -> DataFrame:
     """k nearest indexed keys per query point (SURVEY Table C3).
@@ -501,16 +440,16 @@ def knn(
     round) until a query has >= k exact candidates within the radius (then
     the true kNN is a subset of them), finish with a per-query window top-k.
 
-    Two regimes, picked by query-batch size (same split as
-    plan_query_cells):
+    Two regimes, picked by query-batch size:
 
     - up to ``batch_threshold`` queries: per-round state on the DRIVER,
       round hits persist()-ed so no round re-evaluates prior lineage; the
       small final result is materialized and the caches dropped.
-    - above it: the fully distributed path (_knn_distributed) — the query
-      set is NEVER collected; the remaining set lives as a DataFrame
-      (anti-join on the done ids) and round hits spill to parquet, so a
-      million-point query batch holds no driver-side row state.
+    - above it: _knn_distributed — the query points are never collected;
+      the remaining set lives as a DataFrame (anti-join on the done ids)
+      and round hits spill to parquet. Each round's cap search still plans
+      through plan_query_cells, which holds that round's exploded query
+      cells in driver memory.
 
     ``out_path`` (distributed path only): where the final top-k parquet is
     written — pass a shared-storage path the CALLER owns on a real
@@ -631,14 +570,15 @@ def _knn_distributed(
 ) -> DataFrame:
     """Large-batch kNN: ring expansion with all round state distributed.
 
-    Per round: cap-search the REMAINING queries (a DataFrame — never
-    collected; covering goes through plan_query_cells' distributed path
-    when the batch exceeds its broadcast regime), spill the round's hits to
-    parquet (cuts lineage with zero cached blocks), and shrink the
-    remaining set by an ANTI-JOIN on the queries that reached k candidates.
-    Growing caps are supersets, so the union of all rounds' hits per query
-    equals its final round's candidate set — dedupe (query, key) then one
-    per-query window top-k. The only driver-side values are scalar counts.
+    Per round: cap-search the REMAINING queries (a DataFrame, never
+    collected as points), spill the round's hits to parquet (cuts lineage
+    with zero cached blocks), and shrink the remaining set by an ANTI-JOIN
+    on the queries that reached k candidates. Growing caps are supersets,
+    so the union of all rounds' hits per query equals its final round's
+    candidate set — dedupe (query, key) then one per-query window top-k.
+    The round state never reaches the driver; the search's planner does
+    collect each round's exploded query cells (plan_query_cells), as the
+    broadcast side of the index join.
 
     All round state lives under ``<index_path>/_scratch/knn-<nonce>`` —
     the index's own (shared) filesystem, so executors on a real cluster

@@ -616,6 +616,8 @@ def test_distributed_query_planner_matches_driver(spark, monkeypatch):
     efficiency at ~0.29 at every batch scale. plan_query_cells now runs the
     kernel via mapInPandas above DRIVER_COVER_ROWS; the exploded frame and
     prune prefixes must be identical either way (same kernel, same cells)."""
+    import re
+
     import pandas as pd
 
     from rgm import query as rq
@@ -631,11 +633,11 @@ def test_distributed_query_planner_matches_driver(spark, monkeypatch):
         "cast(11 + id % 40 as double) as lat_hi",
         "cast(-50 + id % 100 as double) as lng_lo",
         "cast(-49 + id % 100 as double) as lng_hi",
-        """case when id % 3 = 2 then array(array(
-             cast(10 + id % 40 as double), cast(-50 + id % 100 as double),
-             cast(10.8 + id % 40 as double), cast(-49.6 + id % 100 as double),
-             cast(10.4 + id % 40 as double), cast(-50.8 + id % 100 as double)
-           )) end as verts""",
+        """case when id % 3 = 2 then array(
+             array(cast(10 + id % 40 as double), cast(-50 + id % 100 as double)),
+             array(cast(10.8 + id % 40 as double), cast(-49.6 + id % 100 as double)),
+             array(cast(10.4 + id % 40 as double), cast(-50.8 + id % 100 as double))
+           ) end as verts""",
         "cast(null as long) as cell_id",
         "cast(30 as int) as max_cells",
     )
@@ -643,6 +645,10 @@ def test_distributed_query_planner_matches_driver(spark, monkeypatch):
     def plan(threshold):
         monkeypatch.setattr(rq, "DRIVER_COVER_ROWS", threshold)
         cells, prefixes = rq.plan_query_cells(spark, q, bucket=3, max_cells=30)
+        assert isinstance(prefixes, list)
+        # q_cells is materialized: a downstream join cannot re-run the covering
+        optimized = cells._jdf.queryExecution().optimizedPlan().toString()
+        assert not re.search(r"MapInPandas|EvalPython|PythonUDF", optimized), optimized
         pdf = (
             cells.toPandas()
             .sort_values(["query_id", "cell_id", "is_anc"])
@@ -653,5 +659,5 @@ def test_distributed_query_planner_matches_driver(spark, monkeypatch):
     drv, drv_pref = plan(threshold=n + 1)  # all-driver kernel
     dist, dist_pref = plan(threshold=1)  # mapInPandas kernel
     assert drv_pref == dist_pref and len(drv_pref) > 0
-    assert len(drv) > 0
+    assert drv["query_id"].nunique() == n  # every cap, rect and triangle covers
     pd.testing.assert_frame_equal(drv, dist)

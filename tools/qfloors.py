@@ -132,7 +132,7 @@ def main() -> None:
         "a serial component proportional to batch size — the all-driver",
         "covering kernel in `plan_query_cells` (~0.46 ms/cap, flat in cores;",
         "14.9s serial at 32k caps). **Reps >= 1 run the post-fix planner**",
-        "(`rgm/query.py:_covers_distributed`: one mapInPandas pass above",
+        "(`rgm/query.py:plan_query_cells`: one mapInPandas pass above",
         "DRIVER_COVER_ROWS=4096, so 8k/32k distribute, 2k stays driver-side):",
         "efficiency now rises monotonically with batch size and the 32k-cap",
         "local[8] wall dropped 60.9s -> 27.2s (rep 1). The residual ~0.23 at",
