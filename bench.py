@@ -1,5 +1,6 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] (default: the cores this process may run on).
+Prints ONE compact JSON line (see ``summary_line``):
   {"metric": ..., "value": <total sec>, "unit": "sec",
    "queries": {name: sec, ...}, "sf": ..., "throughput_rows_per_sec": ...}
 
@@ -8,19 +9,10 @@ Workload shape mirrors the reference benchmark harness
 queries with max_cells=30 coverings against an indexed image-point corpus,
 plus the fixed-level tile-assignment pass and the training-data operators.
 
-Drift robustness (r4 verdict #4): a full bench run repeats the whole
-measured pass SPARK_GRAFT_BENCH_REPS times (default 3; stage-filtered legs
-default 1) in ONE process and reports per-query MINIMA across reps
-alongside the rep-0 single-run numbers — the per-round JSON then carries
-the attrib-style drift-robust table by construction, so cross-round
-comparisons don't depend on which host window the snapshot landed in.
-
-Scaling evidence (north_rule): run via tools/scaling.py (full-run pairs)
-or tools/pairstage.py (stage-interleaved pairs) at two parallelism levels
-on identical input; efficiency = (T_N / T_4N) / 4. Timed index builds
-also emit per-build-stage seconds (build_stages, from the index manifest)
-so scaling reports can attribute the build's N->4N gap to
-covers/keys/pairs/postings.
+Drift robustness (r4 verdict #4): a run repeats the whole measured pass
+REPS times in ONE process and reports per-query MINIMA across reps, so
+cross-round comparisons don't depend on which host window the snapshot
+landed in. Layer-by-layer performance is measured by ``perfbench/run.py``.
 """
 
 from __future__ import annotations
@@ -33,21 +25,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import functions as F
-
 
 def _count(df) -> int:
     return df.count()
-
-
-def work_rows(n_points: int, n_regions: int, rows: dict) -> int:
-    """The throughput numerator — ONE definition shared with
-    tools/scaling.py so BENCH json and BASELINE.md agree."""
-    return (
-        n_points + n_regions
-        + rows.get("tile_assign_s2", 0) + rows.get("contains_2000_caps", 0)
-        + 3 * rows.get("images_synth", 0)  # synth + fidelity + features passes
-    )
 
 
 HEADLINE = [
@@ -56,85 +36,75 @@ HEADLINE = [
     "tile_counts_s2", "images_synth", "images_fidelity",
     "images_features",
 ]
+REPS = 3
+N_REGIONS = 50_000  # the reference write bench's 50k indexed circles
+N_SKEW = 150_000
+N_CAPS = 2_000
+N_IMAGES = 30_000
+
+
+def summary_line(
+    per_rep: list[dict[str, float]], rows: dict[str, int], n_points: int,
+    n_regions: int, sf_dir: str, cpus: int,
+) -> str:
+    """The round record: one JSON line short enough to survive a
+    2,000-character output tail. ``per_rep`` holds each rep's {stage: sec}; ``rows`` the
+    last rep's {stage: rows}, which only feeds the throughput numerator."""
+    # per-query minima across reps — the drift-robust table (single runs on
+    # this host swing ±50%; see BENCH/NOTES_r4.md)
+    timings = {
+        q: min(t[q] for t in per_rep if q in t)
+        for q in dict.fromkeys(k for t in per_rep for k in t)
+    }
+    # headline = the data-proportional pipeline (index builds + the
+    # reference-shaped 2000-cap query batch + the tile pass): the work that
+    # grows with table size and therefore the work whose wall time is the
+    # 100 TB signal. The small fixed-size driver-contract queries (8-cap /
+    # 6-polygon / 4-point kNN / doc operators) are timed and reported but
+    # carry irreducible per-job overhead that vanishes at scale.
+    value = round(sum(timings[q] for q in HEADLINE if q in timings), 3)
+    # throughput: rows ingested into the two indexes + tile assignments +
+    # query batch results, per headline wall second (BASELINE.json metric)
+    work = (
+        n_points + n_regions
+        + rows.get("tile_assign_s2", 0) + rows.get("contains_2000_caps", 0)
+        + 3 * rows.get("images_synth", 0)  # synth + fidelity + features passes
+    )
+    return json.dumps({
+        "metric": "headline_pipeline_wall_sec",
+        "value": value,
+        "unit": "sec",
+        "headline": HEADLINE,
+        "total_incl_extras_sec": round(sum(timings.values()), 3),
+        "queries": timings,
+        "sf": sf_dir,
+        "cpus": cpus,
+        "reps": len(per_rep),
+        "n_points": n_points,
+        "n_regions": n_regions,
+        "throughput_rows_per_sec": round(work / value, 1) if value else None,
+    }, separators=(",", ":"))
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    # SPARK_GRAFT_STAGES=a,b: time ONLY those stages (tools/pairstage.py
-    # runs one stage per subprocess so each stage's low/high legs share a
-    # host window). State a requested stage needs (committed indexes, the
-    # images parquet) is built untimed if missing; unset => full bench,
-    # identical to the historical behavior.
-    _stages = os.environ.get("SPARK_GRAFT_STAGES", "").strip()
-    want: set[str] | None = set(filter(None, _stages.split(","))) or None
-    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "1" if want else "3"))
+    from pyspark.sql import functions as F
 
     from rgm import benchqueries as bq
     from rgm import index as ridx
     from rgm import query as rq
-    from rgm.session import get_spark
+    from rgm.session import get_spark, host_cpus
 
+    cpus = host_cpus()
     spark = get_spark(app_name="rgm-bench", cpus=cpus)
 
-    if want is not None:
-        # Cold-process warmup (untimed): spawn the Python worker pool on
-        # every task slot and load the kernel modules (numpy, rgm.covering,
-        # rgm.images) before any timed stage. A full bench pays this once,
-        # inside its FIRST UDF stage; a one-stage leg would otherwise pay
-        # it inside the timed window at BOTH parallelism levels — a flat
-        # adder that compresses the N-vs-4N ratio (measured: cold
-        # region_index_build_50k read 0.336 efficiency vs ~0.6 warm).
-        import rgm.images as rimg_w
-
-        rimg_w.images_table(spark, 32 * cpus).count()
-        wq = spark.range(8 * cpus).select(
-            F.col("id").cast("string").alias("query_id"),
-            F.lit("cap").alias("kind"),
-            (F.lit(30.0) + (F.col("id") % 10).cast("double")).alias("lat"),
-            F.lit(-100.0).alias("lng"),
-            F.lit(1000.0).alias("radius_m"),
-            F.lit(8).alias("max_cells"),
-        )
-        rq.plan_query_cells(spark, wq, bucket=3, max_cells=8)
-        # micro index build: warms the whole build path (covering UDF,
-        # parquet writers, manifest, bitmap/roaring encode in postings)
-        wpts = spark.range(64 * cpus).select(
-            F.col("id").cast("string").alias("key"),
-            F.lit("point").alias("kind"),
-            (F.lit(30.0) + (F.col("id") % 97).cast("double") / 10.0).alias("lat"),
-            (F.lit(-100.0) + (F.col("id") % 89).cast("double") / 10.0).alias("lng"),
-        )
-        wpath = os.path.join("/tmp", f"rgm_bench_warm_c{cpus}")
-        shutil.rmtree(wpath, ignore_errors=True)
-        ridx.build_index(spark, wpts, "key", wpath, bucket=3, n_buckets=4, resume=False)
-        shutil.rmtree(wpath, ignore_errors=True)
-
-    def wanted(*names: str) -> bool:
-        return want is None or bool(want & set(names))
-
-    def _build_stage_secs(path: str) -> dict[str, float]:
-        from rgm.checkpoint import Manifest
-
-        return {
-            s: round(m.get("secs", 0.0), 3)
-            for s, m in Manifest(path).metrics().items()
-            if "secs" in m
-        }
-
     # ---- one measured pass (repeatable: every timed stage rebuilds its
-    # own state; untimed state builds go through build_index(resume=True),
-    # whose corpus fingerprint + stored-params check rebuilds stale state
-    # instead of silently serving an index built from a different scale
-    # config — ADVICE r4 #2) ------------------------------------------------
+    # own state from scratch) ------------------------------------------------
     def one_pass():
         timings: dict[str, float] = {}
         rows: dict[str, int] = {}
-        build_stages: dict[str, dict[str, float]] = {}
 
         def timed(name: str, fn):
-            if not wanted(name):
-                return None
             t0 = time.time()
             n = fn()
             timings[name] = round(time.time() - t0, 3)
@@ -149,53 +119,25 @@ def main() -> None:
         pts = bq.points_df(spark, sf_dir).select(
             F.col("image_id").alias("key"), F.lit("point").alias("kind"), "lat", "lng"
         )
-        # optional deterministic synthetic scale-up (identical at every
-        # parallelism level — used by tools/scaling.py so the efficiency
-        # measurement is dominated by parallel work, not fixed job overhead)
-        extra = int(os.environ.get("SPARK_GRAFT_EXTRA_POINTS", "0"))
-        if extra > 0:
-            synth = spark.range(extra).select(
-                F.concat(F.lit("x"), F.col("id")).alias("key"),
-                F.lit("point").alias("kind"),
-                (F.lit(24.396308) + (F.col("id") * 6151 % 1000000) / 1000000.0 * (49.384358 - 24.396308)).alias("lat"),
-                (F.lit(-125.0) + (F.col("id") * 4231 % 1000000) / 1000000.0 * (-66.93457 - -125.0)).alias("lng"),
-            )
-            pts = pts.unionByName(synth)
         n_points = pts.count()
 
-        def build(resume: bool = False):
+        def build():
             ridx.build_index(
                 spark, pts, "key", idx_path, bucket=3,
-                n_buckets=max(cpus, 8), resume=resume,
+                n_buckets=max(cpus, 8), resume=False,
             )
             return n_points
 
-        # stages whose legs read the big point index
-        _IDX_DEPS = (
-            "contains_2000_caps", "count_2000_caps", "knn_200",
-            "contains_cap8", "contains_polygon", "knn",
-            "contains_2000_polygons",
-        )
-        if wanted("index_build"):
-            shutil.rmtree(idx_path, ignore_errors=True)
-            timed("index_build", build)
-            build_stages["index_build"] = _build_stage_secs(idx_path)
-        elif wanted(*_IDX_DEPS):
-            # untimed state build; resume=True fingerprint-validates any
-            # committed state against the CURRENT corpus/scale config
-            build(resume=True)
-        from rgm.checkpoint import Manifest
-
-        if Manifest(idx_path).is_committed("postings"):
-            bq._INDEX_CACHE[sf_dir] = idx_path
+        shutil.rmtree(idx_path, ignore_errors=True)
+        timed("index_build", build)
+        bq._INDEX_CACHE[sf_dir] = idx_path
 
         # -- reference write-bench shape: 50k indexed 1 km circles -----------
         # (/root/reference/cpp/benchmarks/main.cpp:145-146 indexes 50,000
         # circle covers; bucket=1 indexes raw cover cells with all-level
         # ancestors — no denormalize fanout for region covers)
-        n_regions = int(os.environ.get("SPARK_GRAFT_BENCH_REGIONS", "50000"))
         region_idx = idx_path + "_regions"
-        region_src = spark.range(n_regions).select(
+        region_src = spark.range(N_REGIONS).select(
             F.concat(F.lit("r"), F.col("id")).alias("key"),
             F.lit("cap").alias("kind"),
             (F.lit(24.396308) + (F.col("id") * 6151 % 1000000) / 1000000.0 * (49.384358 - 24.396308)).alias("lat"),
@@ -204,19 +146,15 @@ def main() -> None:
             F.lit(30).alias("max_cells"),
         )
 
-        def build_regions(resume: bool = False):
+        def build_regions():
             ridx.build_index(
                 spark, region_src, "key", region_idx, bucket=1,
-                n_buckets=max(cpus, 8), resume=resume,
+                n_buckets=max(cpus, 8), resume=False,
             )
-            return n_regions
+            return N_REGIONS
 
-        if wanted("region_index_build_50k"):
-            shutil.rmtree(region_idx, ignore_errors=True)
-            timed("region_index_build_50k", build_regions)
-            build_stages["region_index_build_50k"] = _build_stage_secs(region_idx)
-        elif wanted("region_contains_2000"):
-            build_regions(resume=True)
+        shutil.rmtree(region_idx, ignore_errors=True)
+        timed("region_index_build_50k", build_regions)
 
         # -- hot-cell skew build (SURVEY C7 evidence at bench scale): 30% of
         # the corpus lands in ONE ~50 km box (a single level-3 zone), the
@@ -225,55 +163,44 @@ def main() -> None:
         # AQE skew-join must keep the build within the uniform build's
         # per-row cost. Not in the headline (r1/r2 comparability) — reported
         # as its own entry.
-        n_skew = int(os.environ.get("SPARK_GRAFT_BENCH_SKEW", "150000"))
-        if n_skew and wanted("index_build_hotcell_30pct", "count_hotcell_cap"):
-            skew_idx = idx_path + "_skew"
-            n_hot = n_skew * 3 // 10
-            hot = spark.range(n_hot).select(
-                F.concat(F.lit("h"), F.col("id")).alias("key"),
-                F.lit("point").alias("kind"),
-                (F.lit(37.0) + (F.col("id") * 6151 % 1000000) / 1000000.0 * 0.45).alias("lat"),
-                (F.lit(-106.0) + (F.col("id") * 4231 % 1000000) / 1000000.0 * 0.45).alias("lng"),
-            )
-            cold = spark.range(n_skew - n_hot).select(
-                F.concat(F.lit("u"), F.col("id")).alias("key"),
-                F.lit("point").alias("kind"),
-                (F.lit(24.396308) + (F.col("id") * 7477 % 1000000) / 1000000.0 * (49.384358 - 24.396308)).alias("lat"),
-                (F.lit(-125.0) + (F.col("id") * 5953 % 1000000) / 1000000.0 * (-66.93457 - -125.0)).alias("lng"),
-            )
-            skew_pts = hot.unionByName(cold)
+        skew_idx = idx_path + "_skew"
+        n_hot = N_SKEW * 3 // 10
+        hot = spark.range(n_hot).select(
+            F.concat(F.lit("h"), F.col("id")).alias("key"),
+            F.lit("point").alias("kind"),
+            (F.lit(37.0) + (F.col("id") * 6151 % 1000000) / 1000000.0 * 0.45).alias("lat"),
+            (F.lit(-106.0) + (F.col("id") * 4231 % 1000000) / 1000000.0 * 0.45).alias("lng"),
+        )
+        cold = spark.range(N_SKEW - n_hot).select(
+            F.concat(F.lit("u"), F.col("id")).alias("key"),
+            F.lit("point").alias("kind"),
+            (F.lit(24.396308) + (F.col("id") * 7477 % 1000000) / 1000000.0 * (49.384358 - 24.396308)).alias("lat"),
+            (F.lit(-125.0) + (F.col("id") * 5953 % 1000000) / 1000000.0 * (-66.93457 - -125.0)).alias("lng"),
+        )
+        skew_pts = hot.unionByName(cold)
 
-            def build_skew(resume: bool = False):
-                ridx.build_index(
-                    spark, skew_pts, "key", skew_idx, bucket=3,
-                    n_buckets=max(cpus, 8), resume=resume,
-                )
-                return n_skew
+        def build_skew():
+            ridx.build_index(
+                spark, skew_pts, "key", skew_idx, bucket=3,
+                n_buckets=max(cpus, 8), resume=False,
+            )
+            return N_SKEW
 
-            if wanted("index_build_hotcell_30pct"):
-                shutil.rmtree(skew_idx, ignore_errors=True)
-                timed("index_build_hotcell_30pct", build_skew)
-            else:
-                build_skew(resume=True)
-            # query straight into the hot zone: posting-list union on the
-            # hottest cells (the skew-readers' worst case)
-            hotq = spark.createDataFrame(
-                [("hq", "cap", 37.22, -105.78, 30_000.0)],
-                "query_id string, kind string, lat double, lng double, radius_m double",
-            )
-            timed(
-                "count_hotcell_cap",
-                lambda: _count(rq.count_keys(spark, skew_idx, hotq)),
-            )
+        shutil.rmtree(skew_idx, ignore_errors=True)
+        timed("index_build_hotcell_30pct", build_skew)
+        # query straight into the hot zone: posting-list union on the
+        # hottest cells (the skew-readers' worst case)
+        hotq = spark.createDataFrame(
+            [("hq", "cap", 37.22, -105.78, 30_000.0)],
+            "query_id string, kind string, lat double, lng double, radius_m double",
+        )
+        timed(
+            "count_hotcell_cap",
+            lambda: _count(rq.count_keys(spark, skew_idx, hotq)),
+        )
 
         # -- reference-shaped query batch: 2000 x 1 km caps ------------------
-        # SPARK_GRAFT_BENCH_CAPS scales the batch for the query-floors proof
-        # (tools/qfloors.py); stage names keep the canonical 2000 tag, and
-        # qfloors logs to its own jsonl so scaled runs never pollute the
-        # stage-pair minima. Queries only — no committed index state depends
-        # on this knob, so resume reuse stays valid.
-        n_caps = int(os.environ.get("SPARK_GRAFT_BENCH_CAPS", "2000"))
-        caps = spark.range(n_caps).select(
+        caps = spark.range(N_CAPS).select(
             F.concat(F.lit("c"), F.col("id")).alias("query_id"),
             F.lit("cap").alias("kind"),
             (F.lit(24.396308) + (F.col("id") * 104729 % 100000) / 100000.0 * (49.384358 - 24.396308)).alias("lat"),
@@ -317,22 +244,14 @@ def main() -> None:
         # carry the representative CPU weight in the scaling measurement.
         import rgm.images as rimg
 
-        n_img = int(os.environ.get("SPARK_GRAFT_BENCH_IMAGES", "30000"))
-        # scale config in the dir name: a leg run at a different n_img can
-        # never silently reuse another config's written table (ADVICE r4 #2)
-        img_dir = idx_path + f"_images_{n_img}"
+        img_dir = idx_path + "_images"
 
         def img_synth():
-            rimg.images_table(spark, n_img).write.mode("overwrite").parquet(img_dir)
-            return n_img
+            rimg.images_table(spark, N_IMAGES).write.mode("overwrite").parquet(img_dir)
+            return N_IMAGES
 
-        if wanted("images_synth"):
-            shutil.rmtree(img_dir, ignore_errors=True)
-            timed("images_synth", img_synth)
-        elif wanted("images_fidelity", "images_features") and not os.path.exists(
-            os.path.join(img_dir, "_SUCCESS")
-        ):
-            img_synth()  # untimed state build
+        shutil.rmtree(img_dir, ignore_errors=True)
+        timed("images_synth", img_synth)
         # fidelity/features read the WRITTEN table (the product shape: decode
         # validation and feature extraction run over stored corpora). Until
         # r4 they consumed the lazy synth DF, which (a) re-ran the whole
@@ -343,19 +262,18 @@ def main() -> None:
         # 600k-image scaling config; per-stage N->4N efficiency 0.52 vs 0.83
         # for the single-hop synth stage). A parquet scan is JVM-parallel
         # and one hop.
-        if wanted("images_fidelity", "images_features"):
-            imgs = spark.read.parquet(img_dir)
+        imgs = spark.read.parquet(img_dir)
 
-            def img_fid():
-                fid = rimg.fidelity_check(imgs)
-                bad = fid.filter(
-                    (F.col("psnr") < 40.0) | ~F.col("phash_match") | ~F.col("caption_ok")
-                ).count()
-                assert bad == 0, f"{bad} fidelity violations"
-                return n_img
+        def img_fid():
+            fid = rimg.fidelity_check(imgs)
+            bad = fid.filter(
+                (F.col("psnr") < 40.0) | ~F.col("phash_match") | ~F.col("caption_ok")
+            ).count()
+            assert bad == 0, f"{bad} fidelity violations"
+            return N_IMAGES
 
-            timed("images_fidelity", img_fid)
-            timed("images_features", lambda: rimg.extract_features(imgs).count())
+        timed("images_fidelity", img_fid)
+        timed("images_features", lambda: rimg.extract_features(imgs).count())
 
         # image near-dup at bench scale (the pyspark x image dedup axis):
         # decode -> phash -> pigeonhole Hamming banding over a
@@ -370,7 +288,7 @@ def main() -> None:
         # pairs. n/8 keeps the stage data-proportional (~4M pairs at the
         # scaling config) without letting pair materialization dominate the
         # whole bench wall.
-        n_nd_base = max(n_img // 8, 1000)
+        n_nd_base = max(N_IMAGES // 8, 1000)
 
         def img_neardup():
             corpus = rid.images_with_variants(spark, n_nd_base, variant_every=4)
@@ -409,74 +327,14 @@ def main() -> None:
         timed("text_stats", lambda: _count(bq.q_text_stats(spark, sf_dir)))
         timed("text_tokens_bpe", lambda: _count(bq.q_text_tokens_bpe(spark, sf_dir)))
 
-        return timings, rows, n_points, n_regions, build_stages
+        return timings, rows, n_points
 
     per_rep: list[dict[str, float]] = []
-    rows: dict[str, int] = {}
-    build_stages_reps: list[dict[str, dict[str, float]]] = []
-    n_points = n_regions = 0
-    for _rep in range(max(reps, 1)):
-        timings_r, rows, n_points, n_regions, bs = one_pass()
+    for _rep in range(REPS):
+        timings_r, rows, n_points = one_pass()
         per_rep.append(timings_r)
-        build_stages_reps.append(bs)
-
     spark.stop()
-
-    # per-query minima across reps — the drift-robust table (single runs on
-    # this host swing ±50%; see BENCH/NOTES_r4.md)
-    timings = {
-        q: min(t[q] for t in per_rep if q in t)
-        for q in {k for t in per_rep for k in t}
-    }
-    # headline = the data-proportional pipeline (index builds + the
-    # reference-shaped 2000-cap query batch + the tile pass): the work that
-    # grows with table size and therefore the work whose wall time is the
-    # 100 TB signal. The small fixed-size driver-contract queries (8-cap /
-    # 6-polygon / 4-point kNN / doc operators) are timed and reported but
-    # carry irreducible per-job overhead that vanishes at scale.
-    headline = HEADLINE
-
-    def _headline_sum(t: dict[str, float]) -> float:
-        return round(sum(t[q] for q in headline if q in t), 3)
-
-    value = _headline_sum(timings)
-    total = round(sum(timings.values()), 3)
-    # throughput: rows ingested into the two indexes + tile assignments +
-    # query batch results, per headline wall second (BASELINE.json metric)
-    wrk = work_rows(n_points, n_regions, rows)
-    out = {
-        # the value is the sum of the data-proportional HEADLINE stages
-        # (per-query minima across reps when reps > 1); the all-stages wall
-        # is total_incl_extras_sec
-        "metric": "headline_pipeline_wall_sec",
-        "value": value,
-        "unit": "sec",
-        "headline": headline,
-        "total_incl_extras_sec": total,
-        "queries": timings,
-        "sf": sf_dir,
-        "cpus": cpus,
-        "rows": rows,
-        "n_points": n_points,
-        "n_regions": n_regions,
-        "reps": max(reps, 1),
-        "throughput_rows_per_sec": round(wrk / value, 1) if value else None,
-    }
-    if max(reps, 1) > 1:
-        out["value_rep0"] = _headline_sum(per_rep[0])
-        out["queries_per_rep"] = per_rep
-    # per-build-stage seconds (covers/keys/pairs/postings) for every TIMED
-    # index build — minima across reps, same discipline as queries
-    bs_all = [bs for bs in build_stages_reps if bs]
-    if bs_all:
-        merged: dict[str, dict[str, float]] = {}
-        for bs in bs_all:
-            for b, stages in bs.items():
-                cur = merged.setdefault(b, {})
-                for s, sec in stages.items():
-                    cur[s] = min(cur.get(s, sec), sec)
-        out["build_stages"] = merged
-    print(json.dumps(out))
+    print(summary_line(per_rep, rows, n_points, N_REGIONS, sf_dir, cpus))
 
 
 if __name__ == "__main__":

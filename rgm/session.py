@@ -62,15 +62,30 @@ def package_zip() -> str:
     return final
 
 
+def host_cpus() -> int:
+    """Cores this process may run on: ``SPARK_GRAFT_CPUS`` when set, else
+    the scheduler affinity mask (not ``os.cpu_count()``, which counts
+    cores a container or taskset may not use)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
 def get_spark(
     app_name: str = "rgm",
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
-    driver_memory: str = "48g",
+    driver_memory: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """Local session sized from the host unless told otherwise: ``cpus``
+    defaults to ``host_cpus()``, ``driver_memory`` to half the physical
+    RAM capped at 48g (a heap above physical RAM gets the JVM OOM-killed
+    where it should spill)."""
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = host_cpus()
+    if driver_memory is None:
+        phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+        driver_memory = f"{min(48 * 1024, phys_mb // 2)}m"
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * cpus, 32)
     builder = (

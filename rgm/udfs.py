@@ -490,16 +490,6 @@ def make_tile_udf(level: int):
     return tile_udf
 
 
-def make_parent_udf(level: int):
-    @F.pandas_udf(T.LongType())
-    def parent_udf(cell: pd.Series) -> pd.Series:
-        ids = cm.from_spark(cell.to_numpy().astype(np.int64))
-        lv = np.minimum(cm.level(ids), level)
-        return pd.Series(cm.to_spark(cm.parent(ids, lv)))
-
-    return parent_udf
-
-
 @F.pandas_udf(T.DoubleType())
 def haversine_udf(
     lat1: pd.Series, lng1: pd.Series, lat2: pd.Series, lng2: pd.Series

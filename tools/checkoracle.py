@@ -5,6 +5,10 @@ DuckDB on the same sf dir, compare row count / schema (sorted column names)
 type-sensitive value hash).
 
 Usage: python tools/checkoracle.py [sf_dir] [query ...]
+
+Exits 0 only when every query that ran is GREEN (queries whose oracle
+fixture is pinned to another sf are skipped); an unknown query name exits 2
+before Spark starts.
 """
 
 from __future__ import annotations
@@ -54,7 +58,7 @@ def _values_equal(a: pd.DataFrame, b: pd.DataFrame) -> bool:
     return True
 
 
-def main() -> None:
+def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
@@ -63,6 +67,12 @@ def main() -> None:
     import __spark_entry__ as entrymod
     from rgm.session import get_spark
 
+    queries = entrymod.queries()
+    unknown = sorted(only - set(queries))
+    if unknown:
+        print(f"unknown queries: {unknown}", file=sys.stderr)
+        return 2
+
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
@@ -70,7 +80,6 @@ def main() -> None:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
     spark = get_spark(app_name="rgm-checkoracle")
-    queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
 
     results: dict[str, dict] = {}
@@ -134,7 +143,8 @@ def main() -> None:
     with open(out, "w") as f:
         json.dump(results, f, indent=2)
     spark.stop()
+    return 0 if n_green == len(results) else 1
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())
